@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.rag.Rag
-import graft.store.Catalog
+import graft.store.{AnnIndexes, Catalog}
 
 /** CLI entry points mirroring the reference's task surface
   * (SURVEY.md §2.6: `demo.import` / `demo.search` / `demo.generate`,
@@ -587,9 +587,17 @@ object Demo {
   }
 
   /** demo.search: embed prompt, retrieve top-k over the store —
-    * exact scan by default, LSH-index-backed with ann="lsh" (the index
-    * path carries the chunk dir's file fingerprint, so a re-import
-    * triggers a rebuild rather than serving a stale index). */
+    * exact scan by default, index-backed with ann="lsh"/"ivf"/"pq". An
+    * index dir is keyed to the chunk table's file fingerprint, so an
+    * import never serves a stale index. An IVF index is MAINTAINED like
+    * pgvector's IVFFlat: when the store grew by appends only and the
+    * grown row count keeps the build's nlist, the newest IVF index is
+    * extended with the added rows under its frozen codebook; a
+    * compaction, any other change to the store's files, or an nlist
+    * step retrains it (see `Rag.searchChunksAnnIvf`). LSH and PQ
+    * indexes rebuild on every change. Each index search then sweeps the
+    * superseded siblings and crashed build temps of its kind and dim
+    * that are older than an hour. */
   def search(spark: SparkSession, store: String, prompt: String,
       topK: Int, threshold: Double, dim: Int,
       ann: String = "exact",
@@ -602,53 +610,25 @@ object Demo {
     val q = embedder
       .map(_.embed(prompt).map(_.toDouble))
       .getOrElse(Rag.embedQuery(prompt, dim))
-    lazy val fp = graft.store.AnnIndexes.fingerprint(spark, s"$store/chunks")
-    // re-imports change the fingerprint → a new index dir; AFTER the
-    // new index is built (searchChunksAnn* materialize eagerly), sweep
-    // the obsolete COMPLETED siblings of the same kind and dim so the
-    // store doesn't accumulate full-corpus index copies. Sweeping only
-    // after a successful build means one good index always exists;
-    // `._build_` temps and markerless dirs never match (temp names
-    // don't end in _d<dim>, and only marker-complete dirs are deleted).
-    // A search in ANOTHER process may still be lazily reading an
-    // old-fingerprint index, so stale dirs get a grace period: only
-    // siblings whose index marker is older than `staleGraceMs` are
-    // deleted — an in-flight reader of the previous snapshot (bounded
-    // by query latency, not hours) finishes before its files vanish.
-    // Within one process the new index is always complete before the
-    // sweep, so the delete is never under the feet of this search.
-    def sweepStale(prefix: String, keep: String,
-        staleGraceMs: Long = 60L * 60 * 1000): Unit = {
-      val storeP = new org.apache.hadoop.fs.Path(store)
-      val fs = storeP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val cutoff = System.currentTimeMillis() - staleGraceMs
-      if (fs.exists(storeP))
-        fs.listStatus(storeP).foreach { st =>
-          val name = st.getPath.getName
-          if (name.startsWith(prefix) && name.endsWith(s"_d$dim") &&
-              name != keep &&
-              graft.store.AnnIndexes.isComplete(spark, st.getPath) &&
-              st.getModificationTime < cutoff)
-            fs.delete(st.getPath, true)
-        }
+    // listed lazily: exact prompts never list the store
+    lazy val table = AnnIndexes.listing(spark, s"$store/chunks")
+    // searchChunksAnn* materialize eagerly, so the new index is complete
+    // before its superseded siblings are swept: one good index always
+    // exists
+    def indexed(kind: String)(search: String => DataFrame): DataFrame = {
+      val path = s"$store/ann_${kind}_${table.fingerprint}_d$dim"
+      val hits = search(path)
+      AnnIndexes.sweepStale(spark, path, table.fingerprint)
+      hits
     }
     ann match {
       case "exact" => Rag.searchChunks(chunks, q, topK, threshold)
       case "lsh" =>
-        val name = s"ann_lsh_${fp}_d$dim"
-        val hits = Rag.searchChunksAnn(chunks, s"$store/$name", q, topK, threshold)
-        sweepStale("ann_lsh_", name)
-        hits
+        indexed("lsh")(Rag.searchChunksAnn(chunks, _, q, topK, threshold))
       case "ivf" =>
-        val name = s"ann_ivf_${fp}_d$dim"
-        val hits = Rag.searchChunksAnnIvf(chunks, s"$store/$name", q, topK, threshold)
-        sweepStale("ann_ivf_", name)
-        hits
+        indexed("ivf")(Rag.searchChunksAnnIvf(chunks, table, _, q, topK, threshold))
       case "pq" =>
-        val name = s"ann_pq_${fp}_d$dim"
-        val hits = Rag.searchChunksAnnPq(chunks, s"$store/$name", q, topK, threshold)
-        sweepStale("ann_pq_", name)
-        hits
+        indexed("pq")(Rag.searchChunksAnnPq(chunks, _, q, topK, threshold))
       case "hybrid" =>
         // BM25-over-chunk-text fused with the exact cosine ranking by
         // reciprocal rank; the fused rrf score is surfaced through the

@@ -140,17 +140,21 @@ object Ivf {
     * add-after-train contract: the codebook is fixed at build time and
     * new vectors land in their nearest existing cell; centroid drift
     * is handled by a periodic full rebuild (a compaction job), never
-    * per batch. Returns the loaded codebook so callers can search
-    * immediately. */
+    * per batch. `model` is the index's codebook when the caller already
+    * holds it; otherwise it is loaded from the `_model` sidecar. Returns
+    * the codebook so callers can search immediately. Caller:
+    * `Rag.searchChunksAnnIvf`, which extends the store's index after
+    * appends instead of retraining it. */
   def appendToIndex(
-      newRows: DataFrame, embCol: String, path: String): IvfModel = {
-    val model = loadModel(newRows.sparkSession, s"$path/_model")
-    assign(newRows, embCol, model)
+      newRows: DataFrame, embCol: String, path: String,
+      model: Option[IvfModel] = None): IvfModel = {
+    val codebook = model.getOrElse(loadModel(newRows.sparkSession, s"$path/_model"))
+    assign(newRows, embCol, codebook)
       .repartition(col("ivf_cell"))
       .write.mode(org.apache.spark.sql.SaveMode.Append)
       .partitionBy("ivf_cell")
       .parquet(path)
-    model
+    codebook
   }
 
   /** Persist a codebook as (cell, centroid) parquet. */

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{Embedding, VectorFunctions}
 import graft.ingest.Chunker
-import graft.operators.Similarity
-import graft.store.Catalog
+import graft.operators.{Ivf, Similarity}
+import graft.store.{AnnIndexes, Catalog}
 
 /** RAG retrieval + prompt assembly (SURVEY.md §2.5 G1–G5) over a chunk
   * store, plus the end-to-end import pipeline (§3.1's Spark
@@ -152,35 +152,79 @@ object Rag {
 
   /** IVF variant of `searchChunksAnn`: cell-partitioned index + codebook
     * sidecar; nlist adapts to the store size at build (a codebook needs
-    * at least as many sample rows as cells). */
+    * at least as many sample rows as cells).
+    *
+    * The index is built from the files in `table`, the chunk table's
+    * listing, read with `chunks`' schema, and the build records that
+    * listing and its row count in the index's `_SOURCE` manifest, so the
+    * index and its manifest describe one snapshot. `indexPath`'s name
+    * carries `table`'s fingerprint. The index is MAINTAINED like
+    * pgvector's IVFFlat: a missing index is first tried as an extension
+    * of the newest complete index of an earlier snapshot (a sibling
+    * whose name differs only in the fingerprint). When the table grew
+    * from that snapshot by appends only and the grown row count keeps
+    * the codebook's nlist, the previous index is copied and only the
+    * added files are assigned, with its frozen codebook (the
+    * add-after-train contract). Otherwise — no sibling, no manifest, a
+    * removed or rewritten file (compaction), an nlist step — the index
+    * retrains, which also resets centroid drift. */
   private val ivfStoreModels =
-    scala.collection.concurrent.TrieMap.empty[String, graft.operators.Ivf.IvfModel]
+    scala.collection.concurrent.TrieMap.empty[String, Ivf.IvfModel]
 
   def searchChunksAnnIvf(
       chunks: DataFrame,
+      table: AnnIndexes.Listing,
       indexPath: String,
       queryVec: Array[Double],
       topK: Int = 10,
       threshold: Double = 0.7,
       nprobe: Int = 4): DataFrame = {
     val spark = chunks.sparkSession
-    if (emptyStoreNeedsIndex(spark, chunks, indexPath))
-      return Similarity.topK(chunks, "embedding", queryVec, topK, threshold,
+    lazy val rows = table.read(spark, chunks.schema)
+    if (emptyStoreNeedsIndex(spark, rows, indexPath))
+      return Similarity.topK(rows, "embedding", queryVec, topK, threshold,
         tieBreak = Seq("id"))
-    graft.store.AnnIndexes.materializeAtomic(spark, indexPath) { tmp =>
-      val n = chunks.count()
-      val nlist = math.max(1, math.min(16, (n / 4).toInt))
-      ivfStoreModels(indexPath) = graft.operators.Ivf.buildIndex(
-        chunks, "id", "embedding", tmp, nlist = nlist)
+    AnnIndexes.materializeAtomic(spark, indexPath) { tmp =>
+      val (model, n) = AnnIndexes.newestSibling(spark, indexPath, table.fingerprint)
+        .flatMap(extendIvf(spark, chunks.schema, table, _, tmp))
+        .getOrElse {
+          val n = rows.count()
+          (Ivf.buildIndex(rows, "id", "embedding", tmp, nlist = ivfNlist(n)), n)
+        }
+      ivfStoreModels(indexPath) = model
+      AnnIndexes.writeSource(spark, tmp, AnnIndexes.Source(table.entries, n))
     }
     val model = ivfStoreModels.getOrElseUpdate(indexPath,
-      graft.operators.Ivf.loadModel(spark, s"$indexPath/_model"))
-    graft.operators.Ivf.search(
+      Ivf.loadModel(spark, s"$indexPath/_model"))
+    Ivf.search(
         spark.read.parquet(indexPath), "embedding", queryVec, model,
         k = topK, nprobe = math.min(nprobe, model.nlist),
         tieBreak = Seq("id"))
       .filter(col("similarity") >= threshold)
   }
+
+  /** IVF list count for a store of `rows` chunks. */
+  private def ivfNlist(rows: Long): Int = math.max(1, math.min(16, (rows / 4).toInt))
+
+  /** Build the index for `table` in `tmp` by extending the index at
+    * `previous`; returns its codebook and row count, or None when the
+    * maintenance rule asks for a retrain. */
+  private def extendIvf(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType, table: AnnIndexes.Listing,
+      previous: String, tmp: String): Option[(Ivf.IvfModel, Long)] =
+    for {
+      src <- AnnIndexes.readSource(spark, previous)
+      added <- table.addedSince(src.entries)
+      delta = table.read(spark, schema, added)
+      n = src.rows + delta.count()
+      model = ivfStoreModels.getOrElse(previous,
+        Ivf.loadModel(spark, s"$previous/_model"))
+      if model.nlist == ivfNlist(n)
+    } yield {
+      AnnIndexes.copyIndex(spark, previous, tmp)
+      if (n > src.rows) Ivf.appendToIndex(delta, "embedding", tmp, Some(model))
+      (model, n)
+    }
 
   private val pqStoreModels =
     scala.collection.concurrent.TrieMap.empty[String, graft.operators.Pq.PqModel]
@@ -192,7 +236,7 @@ object Rag {
     * runs only when no completed index exists, so a warm store pays no
     * extra job per search. */
   private def emptyStoreNeedsIndex(
-      spark: SparkSession, chunks: DataFrame, indexPath: String): Boolean =
+      spark: SparkSession, chunks: => DataFrame, indexPath: String): Boolean =
     !graft.store.AnnIndexes.isComplete(
       spark, new org.apache.hadoop.fs.Path(indexPath)) && chunks.isEmpty
 

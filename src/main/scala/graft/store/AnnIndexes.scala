@@ -1,6 +1,7 @@
 package graft.store
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Build-once materialization for ANN indexes (LSH bucket tables, IVF
   * cell tables, MinHash signature tables).
@@ -30,15 +31,50 @@ object AnnIndexes {
   /** Filesystem-safe key fragment for a dataset dir. */
   def keyOf(dir: String): String = dir.replaceAll("[^A-Za-z0-9._-]", "_")
 
-  /** Cheap staleness guard: a fingerprint of the source table's file
-    * names + lengths. Regenerated testdata with different content
-    * sizes gets a different index path (metadata-only — no data read;
-    * same-size content swaps are out of scope for a synthetic-data
-    * cache key). */
-  def fingerprint(spark: SparkSession, tablePath: String): String = {
+  /** A table's files as sorted `relpath:len` entries, relative to
+    * `root` (the table's qualified path), and whether the table exists
+    * at all. */
+  final case class Listing(root: String, entries: Seq[String], exists: Boolean) {
+
+    /** Cheap staleness guard: a hash of the file names + lengths.
+      * Regenerated testdata with different content sizes gets a
+      * different index path (metadata-only — no data read; same-size
+      * content swaps are out of scope for a synthetic-data cache key). */
+    def fingerprint: String =
+      if (!exists) "absent"
+      else f"${scala.util.hashing.MurmurHash3.stringHash(entries.mkString("|"))}%08x"
+
+    /** The entries this listing holds beyond `earlier`, or None when
+      * `earlier` is not a subset of it (a file was removed or resized:
+      * the table did not grow by appends only). */
+    def addedSince(earlier: Seq[String]): Option[Seq[String]] =
+      Option.when(earlier.toSet.subsetOf(entries.toSet))(entries.diff(earlier))
+
+    /** The rows of the data files among `files` (every listed file by
+      * default), read with `schema` and the table root as `basePath`, so
+      * partition columns survive and no footer is read to infer the
+      * schema. Only listed files are read, so rows appended after the
+      * listing are not: the listing and the rows are one snapshot.
+      * Paths with an underscore or dot component (`_SUCCESS`) are not
+      * data, as in Spark's own file index. */
+    def read(spark: SparkSession, schema: StructType,
+        files: Seq[String] = entries): DataFrame = {
+      val data = files.map(e => e.take(e.lastIndexOf(':')))
+        .filterNot(_.split('/').exists(s => s.startsWith("_") || s.startsWith(".")))
+      if (data.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+      else spark.read.schema(schema).option("basePath", root).parquet(data.map(root + _): _*)
+    }
+  }
+
+  /** One recursive listing of `tablePath`. Entries are made relative to
+    * the qualified path, so a relative, absolute or `file:` spelling of
+    * one dir lists (and fingerprints) the same. */
+  def listing(spark: SparkSession, tablePath: String): Listing = {
     val p = new org.apache.hadoop.fs.Path(tablePath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) "absent"
+    val root = fs.makeQualified(p)
+    val prefix = root.toUri.getPath
+    if (!fs.exists(p)) Listing(root.toString, Nil, exists = false)
     else {
       // recursive: partitioned tables append files inside partition
       // dirs, which a top-level listing would not see
@@ -46,9 +82,115 @@ object AnnIndexes {
       val names = scala.collection.mutable.ArrayBuffer.empty[String]
       while (it.hasNext) {
         val s = it.next()
-        names += s"${s.getPath.toUri.getPath.stripPrefix(tablePath)}:${s.getLen}"
+        names += s"${s.getPath.toUri.getPath.stripPrefix(prefix)}:${s.getLen}"
       }
-      f"${scala.util.hashing.MurmurHash3.stringHash(names.sorted.mkString("|"))}%08x"
+      Listing(root.toString, names.sorted.toSeq, exists = true)
+    }
+  }
+
+  /** [[Listing.fingerprint]] of `tablePath`'s current files. */
+  def fingerprint(spark: SparkSession, tablePath: String): String =
+    listing(spark, tablePath).fingerprint
+
+  /** An index's build manifest (`_SOURCE`): the source table's listing
+    * entries when the index was built, and the index's row count. */
+  final case class Source(entries: Seq[String], rows: Long)
+
+  /** Manifest filename inside an index dir (underscore-prefixed, so
+    * invisible to Spark's partition discovery). */
+  val SourceName = "_SOURCE"
+
+  def writeSource(spark: SparkSession, dir: String, src: Source): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir, SourceName)
+    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
+    try out.write((s"rows ${src.rows}" +: src.entries).mkString("", "\n", "\n")
+      .getBytes("UTF-8"))
+    finally out.close()
+  }
+
+  /** The manifest of the index at `dir`; None when it has none (an
+    * index built before manifests existed). */
+  def readSource(spark: SparkSession, dir: String): Option[Source] = {
+    val p = new org.apache.hadoop.fs.Path(dir, SourceName)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      val lines =
+        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
+        finally in.close()
+      Some(Source(lines.tail, lines.head.stripPrefix("rows ").toLong))
+    }
+  }
+
+  /** The children of the dir holding `indexPath`, and a test for the
+    * names of the index dirs of any snapshot of its table: an index name
+    * carries the table fingerprint `fp` (`ann_ivf_<fp>_d64`), and the
+    * index dirs of other snapshots differ from it only there. */
+  private def keyedDirs(spark: SparkSession, indexPath: String, fp: String)
+      : (org.apache.hadoop.fs.FileSystem, Seq[org.apache.hadoop.fs.FileStatus],
+        String => Boolean) = {
+    val p = new org.apache.hadoop.fs.Path(indexPath)
+    val name = p.getName
+    val at = name.lastIndexOf(fp)
+    require(at >= 0, s"index name $name does not carry fingerprint $fp")
+    val (prefix, suffix) = (name.take(at), name.drop(at + fp.length))
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val children =
+      if (fs.exists(p.getParent)) fs.listStatus(p.getParent).toSeq else Nil
+    (fs, children, n => n.startsWith(prefix) && n.endsWith(suffix))
+  }
+
+  /** The most recently completed index of another snapshot of the table
+    * that `indexPath` indexes under fingerprint `fp`, spelled like
+    * `indexPath`. */
+  def newestSibling(spark: SparkSession, indexPath: String, fp: String): Option[String] = {
+    val name = new org.apache.hadoop.fs.Path(indexPath).getName
+    val (_, children, keyed) = keyedDirs(spark, indexPath, fp)
+    children
+      .filter { st =>
+        val n = st.getPath.getName
+        n != name && keyed(n) && isComplete(spark, st.getPath)
+      }
+      .sortBy(st => (st.getModificationTime, st.getPath.getName))
+      .lastOption.map(st => indexPath.stripSuffix(name) + st.getPath.getName)
+  }
+
+  /** Copy the index at `from` into the new dir `to`, leaving out its
+    * completion marker, manifest and `_SUCCESS` stamp, which describe
+    * `from` only and are rewritten in `to`. */
+  def copyIndex(spark: SparkSession, from: String, to: String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val src = new org.apache.hadoop.fs.Path(from)
+    val fs = src.getFileSystem(conf)
+    val dst = new org.apache.hadoop.fs.Path(to)
+    val own = Set(MarkerName, SourceName, "_SUCCESS")
+    fs.mkdirs(dst)
+    fs.listStatus(src).filterNot(st => own(st.getPath.getName))
+      .foreach(st => org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
+        new org.apache.hadoop.fs.Path(dst, st.getPath.getName), false, conf))
+  }
+
+  /** Delete what builds of `indexPath`'s table left behind next to it:
+    * completed indexes of other snapshots (see `newestSibling`), and
+    * `._build_`/`._corpse_` temps of a build whose process died. A
+    * search in ANOTHER process may still be lazily reading an old
+    * index, so only entries older than an hour go — an in-flight
+    * reader of the previous snapshot (bounded by query latency, not
+    * hours) finishes before its files vanish, and a live build's temp
+    * is minutes old at most. */
+  def sweepStale(spark: SparkSession, indexPath: String, fp: String): Unit = {
+    val name = new org.apache.hadoop.fs.Path(indexPath).getName
+    val (fs, children, keyed) = keyedDirs(spark, indexPath, fp)
+    val cutoff = System.currentTimeMillis() - 60L * 60 * 1000
+    children.foreach { st =>
+      val n = st.getPath.getName
+      val temp = Seq("._build_", "._corpse_").map(n.indexOf(_)).find(_ >= 0)
+      val stale = temp match {
+        case Some(at) => keyed(n.take(at))
+        case None => n != name && keyed(n) && isComplete(spark, st.getPath)
+      }
+      if (stale && st.getModificationTime < cutoff) fs.delete(st.getPath, true)
     }
   }
 

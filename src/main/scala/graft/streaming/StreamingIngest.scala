@@ -21,8 +21,10 @@ import org.apache.spark.sql.types.StructType
   *    so replays/speculation never mint conflicting ids;
   *  - chunk writes append; the small-file accumulation every streaming
   *    sink suffers is handled by `Catalog.compactChunks` exactly as
-  *    for batch imports, and ANN indexes rebuild on fingerprint change
-  *    (or extend via appendToLshIndex / Ivf.appendToIndex).
+  *    for batch imports; the store's IVF index extends after appends
+  *    (`Rag.searchChunksAnnIvf`), LSH and PQ indexes rebuild on
+  *    fingerprint change (or extend via appendToLshIndex /
+  *    Pq.appendToIndex).
   *
   * At scale this is the file-arrival ingest loop: new parquet drops in
   * `docsDir` are discovered by the source, processed once (checkpoint

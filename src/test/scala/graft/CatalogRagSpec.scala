@@ -6,8 +6,12 @@ import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
+import graft.cli.Demo
+import graft.operators.Ivf
 import graft.rag.Rag
-import graft.store.Catalog
+import graft.store.{AnnIndexes, Catalog}
 
 class CatalogRagSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
@@ -287,6 +291,193 @@ class CatalogRagSpec extends AnyFunSuite {
     graft.cli.Demo.display(mmrHits)
   }
 
+  // IVF index maintenance: the index dir for the store's current files,
+  // and whether `next` kept every data file of `prev` (an extension
+  // copies them; a retrain writes all-new files)
+  private def ivfIndex(store: String): String =
+    s"$store/ann_ivf_${AnnIndexes.fingerprint(spark, s"$store/chunks")}_d64"
+
+  private def dataFiles(dir: String): Set[String] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.map(root.relativize(_).toString)
+      .filter(f => f.endsWith(".parquet") && !f.startsWith("_model")).toSet
+    finally walk.close()
+  }
+
+  private def extended(prev: String, next: String): Boolean =
+    dataFiles(prev).nonEmpty && dataFiles(prev).subsetOf(dataFiles(next))
+
+  private def centroidBits(dir: String): Seq[Seq[Long]] =
+    Ivf.loadModel(spark, s"$dir/_model").centroids.toSeq
+      .map(_.toSeq.map(java.lang.Double.doubleToRawLongBits))
+
+  private def nlistFor(rows: Long): Long = math.max(1L, math.min(16L, rows / 4))
+
+  private def oneDoc(docId: Long, title: String, text: String) = {
+    import spark.implicits._
+    Seq((docId, title, "Anon", "short story", "science fiction", "1950", text))
+      .toDF("doc_id", "title", "author", "text_type", "genre",
+        "publication_date", "text")
+  }
+
+  test("IVF store index: extended with its frozen codebook after an append, retrained after compaction") {
+    val store = tmpDir() + "/store"
+    val chunksDir = s"$store/chunks"
+    Demo.importDocs(spark, Demo.demoCorpus(spark), store, "demo-model",
+      dim = 64, maxTokens = 6)
+    val prompt = "are robots friendly to humans"
+    def ivf() = Demo.search(spark, store, prompt, topK = 5,
+      threshold = -1.0, dim = 64, ann = "ivf")
+    ivf()
+    val first = ivfIndex(store)
+    val rowsBefore = spark.read.parquet(chunksDir).count()
+    Demo.importDocs(spark, oneDoc(6L, "Robbie",
+        "a robot nursemaid loves the girl it guards"),
+      store, "demo-model", dim = 64, maxTokens = 6)
+    val chunks = spark.read.parquet(chunksDir)
+    val rows = chunks.count()
+    assert(rows > rowsBefore && nlistFor(rows) == nlistFor(rowsBefore),
+      s"fixture must grow within one nlist step: $rowsBefore -> $rows")
+    val hits = ivf().select("id", "similarity").collect().toSeq
+    val second = ivfIndex(store)
+    assert(second != first && extended(first, second))
+    // the codebook is frozen: bit-for-bit the previous index's
+    assert(centroidBits(second) == centroidBits(first))
+    val model = Ivf.loadModel(spark, s"$second/_model")
+    val index = spark.read.parquet(second)
+    assert(index.count() == rows)
+    assert(index.filter(col("ivf_cell") =!=
+      Ivf.cellOf(col("embedding"), model)).count() == 0)
+    val expected = Ivf.search(Ivf.assign(chunks, "embedding", model),
+        "embedding", Rag.embedQuery(prompt, 64), model, k = 5,
+        nprobe = math.min(4, model.nlist), tieBreak = Seq("id"))
+      .select("id", "similarity").collect().toSeq
+    assert(hits.nonEmpty && hits == expected)
+    assert(AnnIndexes.readSource(spark, second) == Some(AnnIndexes.Source(
+      AnnIndexes.listing(spark, chunksDir).entries, rows)))
+    // compaction rewrites every file: the index retrains
+    Catalog.compactChunks(spark, chunksDir)
+    ivf()
+    val third = ivfIndex(store)
+    assert(third != second && !extended(second, third))
+    assert(AnnIndexes.readSource(spark, third).map(_.entries) ==
+      Some(AnnIndexes.listing(spark, chunksDir).entries))
+  }
+
+  test("IVF store index: the index and its manifest describe the listed snapshot") {
+    val store = tmpDir() + "/store"
+    val chunksDir = s"$store/chunks"
+    Demo.importDocs(spark, Demo.demoCorpus(spark), store, "demo-model",
+      dim = 64, maxTokens = 6)
+    // read before every listing, and appended to after each listing
+    val chunks = spark.read.parquet(chunksDir)
+    val q = Rag.embedQuery("robots", 64)
+    def listThenAppend(docId: Long): AnnIndexes.Listing = {
+      val table = AnnIndexes.listing(spark, chunksDir)
+      Demo.importDocs(spark, oneDoc(docId, s"Robbie $docId", "a robot nursemaid"),
+        store, "demo-model", dim = 64, maxTokens = 6)
+      table
+    }
+    def searchListed(table: AnnIndexes.Listing): String = {
+      val idx = s"$store/ann_ivf_${table.fingerprint}_d64"
+      Rag.searchChunksAnnIvf(chunks, table, idx, q, topK = 3,
+        threshold = -1.0).collect()
+      idx
+    }
+    val t1 = listThenAppend(6L)
+    val first = searchListed(t1) // a retrain
+    val t2 = listThenAppend(7L)
+    val second = searchListed(t2) // an extension of `first`
+    assert(extended(first, second))
+    val storeRows = spark.read.parquet(chunksDir).count()
+    for ((table, idx) <- Seq(t1 -> first, t2 -> second)) {
+      val src = AnnIndexes.readSource(spark, idx).get
+      val listedRows = table.read(spark, chunks.schema).count()
+      assert(src.entries == table.entries)
+      assert(spark.read.parquet(idx).count() == src.rows)
+      assert(src.rows == listedRows && listedRows < storeRows)
+    }
+  }
+
+  test("IVF store index: an index without a _SOURCE manifest is never extended") {
+    val store = tmpDir() + "/store"
+    Demo.importDocs(spark, Demo.demoCorpus(spark), store, "demo-model",
+      dim = 64, maxTokens = 6)
+    def ivf() = Demo.search(spark, store, "robots", topK = 3,
+      threshold = -1.0, dim = 64, ann = "ivf")
+    ivf()
+    val first = ivfIndex(store)
+    // an index built before manifests existed
+    assert(new java.io.File(s"$first/${AnnIndexes.SourceName}").delete())
+    Demo.importDocs(spark, oneDoc(6L, "Robbie", "a robot nursemaid"),
+      store, "demo-model", dim = 64, maxTokens = 6)
+    ivf()
+    val second = ivfIndex(store)
+    assert(second != first && !extended(first, second))
+    assert(AnnIndexes.readSource(spark, second).nonEmpty)
+  }
+
+  test("IVF store index: growth across an nlist step retrains") {
+    val store = tmpDir() + "/store"
+    Demo.importDocs(spark, Demo.demoCorpus(spark), store, "demo-model",
+      dim = 64, maxTokens = 32)
+    def ivf() = Demo.search(spark, store, "robots", topK = 3,
+      threshold = -1.0, dim = 64, ann = "ivf")
+    ivf()
+    val first = ivfIndex(store)
+    val rowsBefore = spark.read.parquet(s"$store/chunks").count()
+    Demo.importDocs(spark, Demo.demoCorpus(spark)
+        .withColumn("doc_id", col("doc_id") + 10)
+        .withColumn("title", concat(col("title"), lit(" II"))),
+      store, "demo-model", dim = 64, maxTokens = 32)
+    val rows = spark.read.parquet(s"$store/chunks").count()
+    assert(rowsBefore < 64 && nlistFor(rows) != nlistFor(rowsBefore),
+      s"fixture must cross an nlist step: $rowsBefore -> $rows")
+    ivf()
+    val second = ivfIndex(store)
+    assert(!extended(first, second))
+    assert(centroidBits(second).size == nlistFor(rows))
+  }
+
+  test("index search sweeps crashed build temps older than the grace period") {
+    val store = tmpDir() + "/store"
+    Demo.importDocs(spark, Demo.demoCorpus(spark), store, "demo-model",
+      dim = 64, maxTokens = 32)
+    val fs = new org.apache.hadoop.fs.Path(store)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def plant(name: String, ageMs: Long): org.apache.hadoop.fs.Path = {
+      val p = new org.apache.hadoop.fs.Path(store, name)
+      fs.create(new org.apache.hadoop.fs.Path(p, "part-0.parquet")).close()
+      val t = System.currentTimeMillis() - ageMs
+      fs.setTimes(p, t, t)
+      p
+    }
+    val oldBuild = plant("ann_ivf_0000dead_d64._build_1a2b3c4d", 2L * 3600 * 1000)
+    val oldCorpse = plant("ann_ivf_0000dead_d64._corpse_5e6f7a8b", 2L * 3600 * 1000)
+    val fresh = plant("ann_ivf_0000beef_d64._build_9c0d1e2f", 60L * 1000)
+    Demo.search(spark, store, "robots", topK = 3, threshold = -1.0,
+      dim = 64, ann = "ivf")
+    assert(!fs.exists(oldBuild) && !fs.exists(oldCorpse))
+    assert(fs.exists(fresh))
+  }
+
+  test("fingerprint: relative, absolute and file: spellings of one dir agree") {
+    val rel = Files.createTempDirectory(java.nio.file.Paths.get("target"), "graft_fp")
+    try {
+      Catalog.writeChunks(Rag.buildChunks(
+        spark.range(3).selectExpr("id AS doc_id", "'alpha beta gamma' AS text"),
+        modelId = 1L, maxTokens = 2, dim = 8), rel.toString)
+      val abs = rel.toAbsolutePath.toString
+      val fps = Seq(rel.toString, abs, s"file:$abs")
+        .map(AnnIndexes.fingerprint(spark, _))
+      assert(fps.distinct.size == 1, fps.toString)
+      // entries are relative to the table root
+      assert(AnnIndexes.listing(spark, rel.toString).entries
+        .forall(e => e.startsWith("/") && !e.contains(abs)))
+    } finally new scala.reflect.io.Directory(rel.toFile).deleteRecursively()
+  }
+
   test("approx_percentile within 2.5% of exact per group") {
     // approx_percentile returns an actual element; exact percentile
     // interpolates — at sf0.001's ~300-row groups the nearest-element
@@ -324,8 +515,9 @@ class CatalogRagSpec extends AnyFunSuite {
     val idx = tmpDir()
     assert(Rag.searchChunksAnnPq(chunks, idx + "/pq", q, topK = 3,
       threshold = -1.0).count() == 0)
-    assert(Rag.searchChunksAnnIvf(chunks, idx + "/ivf", q, topK = 3,
-      threshold = -1.0).count() == 0)
+    val table = AnnIndexes.listing(spark, idx + "/chunks")
+    assert(Rag.searchChunksAnnIvf(chunks, table, s"$idx/ivf_${table.fingerprint}",
+      q, topK = 3, threshold = -1.0).count() == 0)
   }
 
   test("chunk store round trip with model_id partitioning") {
